@@ -606,8 +606,8 @@ def dedup_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     + broadcast delta counts), the full-corpus ns union (stored sidecar
     ∪ crawl counts), the admission guard, and the two-leg probe split
     (crawl-vs-table + crawl-bounded self-probe) that keeps the corpus
-    exchange-free — lifecycle.py:168-250, the one load-bearing r8
-    surface that had only local-suite coverage.
+    exchange-free — lifecycle._CountSidecarIndex's probe, the one
+    load-bearing surface that had only local-suite coverage.
 
     Oracle: the dedup_incremental golden recipe over the SAME corpus
     with the probe restricted to odd delta ids (the crawl leg); the

@@ -19,9 +19,15 @@ lifecycle:
                                      tests/test_round8_ops.py,
                                      tests/test_lifecycle_api.py)
 
-This module lifts the recipes that previously lived inline in
-scripts/bench_incremental.py and the lifecycle tests into a product
-API. Design rules at the 100 TB point:
+The two text indexes, PostingIndex (shingle postings) and BandIndex
+(MinHash band rows), are one implementation: the private base
+``_CountSidecarIndex`` holds exists/build/append/compact/drop, the
+count-sidecar write, the guard + generation-max pre-flight and the
+prepare_probe/probe census merge. A subclass names its key columns and
+supplies the key rows, the per-doc sidecar frame and the pair
+finisher. SemanticRelease keeps its own, simpler lifecycle (one table
+plus frozen centroids, no count sidecar). Design rules at the 100 TB
+point:
 
 - **Sidecar count tables, not recomputed censuses.** Skew guards
   (shingle df caps, LSH bucket caps) need per-key counts over the
@@ -103,14 +109,19 @@ def _bucket_aligned(df: DataFrame, buckets: int, *cols: str) -> DataFrame:
     return df.repartition(buckets, *[F.col(c) for c in cols])
 
 
+def _tokenized(docs: DataFrame) -> DataFrame:
+    """docs (doc_id, text) with ≥3 whitespace tokens, the tokens under
+    ``toks`` — the input _gram_hashes() reads."""
+    return docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
+        F.size("toks") >= 3
+    )
+
+
 def shingle_table(docs: DataFrame) -> DataFrame:
     """(doc_id, sh array<long>) — distinct 3-gram shingle hashes per
     doc with ≥3 tokens, via THE one shingle-hash definition
     (dedup._gram_hashes); docs: (doc_id, text)."""
-    toked = docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-        F.size("toks") >= 3
-    )
-    return toked.select(
+    return _tokenized(docs).select(
         "doc_id", F.array_distinct(_gram_hashes()).alias("sh")
     )
 
@@ -124,10 +135,7 @@ def _postings(docs: DataFrame) -> DataFrame:
     Project, where interpreted predicates have no CSE — O(tokens²)
     string work per doc on the scan side (the pinned r7 lesson;
     re-measured here: 7.0 s → sub-second for a 5 k-doc crawl at sf1)."""
-    toked = docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-        F.size("toks") >= 3
-    )
-    return toked.select(
+    return _tokenized(docs).select(
         "doc_id", F.explode(F.array_distinct(_gram_hashes())).alias("h")
     )
 
@@ -135,24 +143,6 @@ def _postings(docs: DataFrame) -> DataFrame:
 def _drop(spark: SparkSession, *tables: str) -> None:
     for t in tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def _run_overlapped(*thunks) -> list:
-    """Run independent driver actions SEQUENTIALLY.
-
-    NOTE (r14, measured negative result): a thread-pool variant (guide
-    §2.6 — overlap the build/append write trios, which are independent
-    writes to distinct tables over a shared read-only cache) was tried
-    and REVERTED. Warm-session cold-path interleaved A/B on
-    dedup_lifecycle_probe at sf0.1 (4 cold rebuilds per child, tables
-    dropped between, bench-identical cache-clear+GC): overlapped med
-    12.87 / 8.52 s vs sequential 7.21 / 8.16 s across two rounds —
-    three concurrent 32-core write stages oversubscribe the local
-    executor (≈96 runnable tasks on 32 cores) and contend on one disk's
-    commit path, costing more than the saved scheduler round-trips. On
-    a real cluster with idle executors the overlap is the right call —
-    re-evaluate there; the helper keeps the call sites ready."""
-    return [t() for t in thunks]
 
 
 def _clean_orphan_location(spark: SparkSession, table: str) -> None:
@@ -207,18 +197,25 @@ def process_index_name(base: str) -> str:
     return f"{base}_p{os.getpid()}"
 
 
-_PID_INDEX_DIR = re.compile(r"^(?P<base>.+)_p(?P<pid>\d+)_[a-z_]+$")
+#: A top-level warehouse entry of a per-process index: a table
+#: directory ``{base}_p{pid}_{suffix}``, the ``{base}_p{pid}_stamp``
+#: sidecar file, or its hidden ``.{base}_p{pid}_stamp.crc`` checksum.
+_PID_INDEX_ENTRY = re.compile(r"^\.?(?P<base>.+)_p(?P<pid>\d+)_[a-z_]+(?:\.crc)?$")
 _REAPED: set[str] = set()
 
 
 def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
-    """Best-effort GC for ``{base}_p{pid}_*`` warehouse directories left
-    by DEAD processes (once per process per base — driver-side listdir,
-    zero Spark jobs). A directory is deleted only when its embedded pid
+    """Best-effort GC for ``{base}_p{pid}_*`` warehouse entries (table
+    directories, stamp files and their ``.crc`` twins) left by DEAD
+    processes (once per process per base — driver-side listdir, zero
+    Spark jobs). An entry is deleted only when its embedded pid
     provably no longer exists (``os.kill(pid, 0)`` → ESRCH); a live or
     unverifiable pid is left alone, so a concurrently running process's
     index is never touched — the deletion race this namespace exists to
-    prevent. Remote warehouses are skipped: deployments own their GC."""
+    prevent. A stale stamp of a dead pid that a new process reuses can
+    never cause a wrong skip: ``exists()`` consults this process's own
+    catalog, which holds none of the dead process's tables. Remote
+    warehouses are skipped: deployments own their GC."""
     if base in _REAPED:
         return
     _REAPED.add(base)
@@ -233,7 +230,7 @@ def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
         return
     me = os.getpid()
     for d in entries:
-        m = _PID_INDEX_DIR.match(d)
+        m = _PID_INDEX_ENTRY.match(d)
         if not m or m.group("base") != base.lower():
             continue
         pid = int(m.group("pid"))
@@ -242,7 +239,14 @@ def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
         try:
             os.kill(pid, 0)
         except ProcessLookupError:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            path = os.path.join(root, d)
+            if os.path.isdir(path) and not os.path.islink(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                try:
+                    os.remove(path)
+                except OSError:
+                    pass
         except Exception:
             continue
 
@@ -316,8 +320,7 @@ def corpus_fingerprint(docs: DataFrame, *cols: str) -> str:
     append-only/immutable-doc contract where (id, length) uniquely
     tracks content; callers choosing that trade must say so (the
     registered dedup_lifecycle_probe does, in its docstring)."""
-    row = _fingerprint_agg(docs, cols).first()
-    return _stamp(row["n"], row["hs"])
+    return fingerprint_leg(docs, cols).first()["id"]
 
 
 def _fingerprint_agg(docs: DataFrame, cols) -> DataFrame:
@@ -329,28 +332,24 @@ def _fingerprint_agg(docs: DataFrame, cols) -> DataFrame:
     DECIMAL(38,0) accumulator: a SUM over int64 hashes overflows long
     almost immediately and ANSI mode (the driver session default)
     turns that into ARITHMETIC_OVERFLOW; 38 digits hold the exact sum
-    to ~1e19 rows."""
+    to ~1e19 rows. An empty corpus sums to 0, not NULL, so its stamp
+    renders as ``v1:0:0`` rather than vanishing in the concat."""
     return docs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")
+        F.coalesce(
+            F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
         ).alias("hs"),
     )
-
-
-def _stamp(n, hs) -> str:
-    """Render a fingerprint row as the stamp string. Must agree with
-    fingerprint_leg's SQL-side rendering (both print the DECIMAL(38,0)
-    sum as a plain integer) — pinned by
-    tests/test_round10_ops.py::test_fused_stamp_leg_format."""
-    return f"v1:{n}:{hs}"
 
 
 def fingerprint_leg(docs: DataFrame, cols, kind: str = "fp") -> DataFrame:
     """corpus_fingerprint as a 1-row ``(kind, num, id)`` leg for a
     _preflight_frame union — the stamp string lands under ``id`` so a
     warm caller's idempotence check rides the probe's single pre-flight
-    collect instead of paying its own driver action."""
+    collect instead of paying its own driver action. The one rendering
+    of a stamp: corpus_fingerprint and release_current read it back
+    from ``id``."""
     return _fingerprint_agg(docs, cols).select(
         F.lit(kind).alias("kind"),
         F.lit(None).cast("long").alias("num"),
@@ -371,8 +370,7 @@ def release_current(
     Fingerprint column choice: see corpus_fingerprint's
     content-blindness note."""
     stored = release_stamp(spark, name)
-    row = _fingerprint_agg(docs, cols).first()
-    stamp = _stamp(row["n"], row["hs"])
+    stamp = corpus_fingerprint(docs, *cols)
     return stamp, stored is not None and stored == stamp
 
 
@@ -454,9 +452,7 @@ def _exact_max(
     """Max merged per-key count: of one generation's rows (postings /
     band rows — each row counts 1) when ``generation`` is given, else
     of the whole stored count sidecar (SUM of its per-append rows,
-    partition-local on the bucket layout). One implementation for both
-    index families (review r10 — the per-class copies had to be kept
-    in sync by hand)."""
+    partition-local on the bucket layout)."""
     if generation is None:
         frame = spark.table(sidecar).groupBy(*keys).agg(F.sum("n").alias("n"))
     else:
@@ -476,7 +472,7 @@ def _settle_ub_after_append(idx, sidecar: str, keys: list[str], ub: int | None) 
 
 
 def _auto_compact(idx, sidecar: str, ub: int) -> None:
-    """Bound-based auto-compact shared by both index families — see
+    """Bound-based auto-compact — see
     PostingIndex.auto_compact_ub_frac for the rationale."""
     frac = idx.auto_compact_ub_frac
     if frac is None or ub <= idx.cap * frac:
@@ -518,13 +514,12 @@ def _preflight_dmax(rows: list, key: str, what: str) -> int:
     """Consume collected _preflight_frame rows: raise on overlap,
     return the delta-side per-key max (0 for an empty delta). The one
     implementation behind both the probe verdict and the fused append
-    preflight (r14 — append used to pay separate guard-collect and
-    generation-max jobs; see PostingIndex.append)."""
+    preflight."""
     clash_ids = [r["id"] for r in rows if r["kind"] == "clash"]
     if clash_ids:
         # the union leg carries ids as strings; report them native so
         # the error matches _assert_disjoint's (numeric ids sort
-        # numerically, not lexicographically — review r10)
+        # numerically, not lexicographically)
         try:
             clash_ids = [int(v) for v in clash_ids]
         except (TypeError, ValueError):
@@ -552,19 +547,21 @@ def _preflight_verdict(
 @dataclass
 class PendingProbe:
     """A probe split at its one driver action — see
-    PostingIndex.prepare_probe. ``checks`` is lazy; ``finish`` takes
-    the rows collected from it (or from any union-extended version of
-    it) and returns the result plan."""
+    _CountSidecarIndex.prepare_probe. ``checks`` is lazy; ``finish``
+    takes the rows collected from it (or from any union-extended
+    version of it) and returns the result plan. ``_delta_rows`` are
+    the crawl's persisted key rows, ``_delta_docs`` its per-doc
+    sidecar frame."""
 
-    _idx: "PostingIndex"
-    _delta_post: DataFrame
-    _delta_counts: DataFrame
+    _idx: "_CountSidecarIndex"
+    _delta_rows: DataFrame
+    _delta_docs: DataFrame
     checks: DataFrame
     _ub: int | None
 
     def finish(self, rows: list, tau: float = 0.5) -> DataFrame:
         return self._idx._finish_probe_plan(
-            self._delta_post, self._delta_counts, rows, self._ub, tau
+            self._delta_rows, self._delta_docs, rows, self._ub, tau
         )
 
 
@@ -606,8 +603,243 @@ def _compact_counts(
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
 
 
+class _CountSidecarIndex:
+    """The build → append → probe lifecycle shared by PostingIndex and
+    BandIndex. An index is three bucketed tables, named
+    ``{name}_{suffix}`` after ``_suffixes``:
+
+    - the KEY table: (doc_id, key columns ``_keys``) rows bucketed and
+      sorted by the key — the probe joins it without moving it;
+    - the DOC table: one row per doc, bucketed by doc_id — the per-doc
+      side of the Jaccard verify;
+    - the COUNT table: per-key row counts bucketed by the key — the
+      skew-guard census. Each append adds one row per key, so a
+      current count is a partition-local SUM; compact() folds it to one
+      row per key. Its ``overturelink.ub`` table property bounds the
+      largest merged count (see _preflight_verdict).
+
+    A subclass supplies the names plus three hooks: ``_key_rows(docs)``
+    (the key rows of a doc frame), ``_doc_frame(docs, key_rows)`` (the
+    doc-table rows) and ``_pairs(index, delta, docs, hot, tau)`` (the
+    result plan from the key rows with the hot keys, if any, still
+    in). Build and append persist the key rows ONCE, already
+    bucket-aligned, so all writes share one tokenize pass and each
+    write lands one file per bucket; the writes run in sequence (key
+    rows, doc rows, counts) and the drifted ub is written before them."""
+
+    _suffixes: tuple[str, str, str]
+    _keys: tuple[str, ...]
+
+    @property
+    def _key_table(self) -> str:
+        return f"{self.name}_{self._suffixes[0]}"
+
+    @property
+    def _doc_table(self) -> str:
+        return f"{self.name}_{self._suffixes[1]}"
+
+    @property
+    def _count_table(self) -> str:
+        return f"{self.name}_{self._suffixes[2]}"
+
+    def _tables(self) -> tuple[str, str, str]:
+        return self._key_table, self._doc_table, self._count_table
+
+    def _what(self, op: str) -> str:
+        return f"{type(self).__name__}({self.name}).{op}"
+
+    def exists(self) -> bool:
+        """All index tables present in the catalog — the guard a
+        stamped caller pairs with release_stamp before skipping a
+        build (a matching stamp with dropped tables must rebuild)."""
+        return all(self.spark.catalog.tableExists(t) for t in self._tables())
+
+    def _count_keys(self, key_rows: DataFrame, alias: str = "n") -> DataFrame:
+        return key_rows.groupBy(*self._keys).agg(F.count(F.lit(1)).alias(alias))
+
+    def _clash(self, key_rows: DataFrame) -> DataFrame | None:
+        # an overlapping crawl would duplicate doc-table rows and
+        # corrupt every Jaccard denominator silently; the ≤5-row clash
+        # frame rides the pre-flight collect
+        if not self.guard_overlap:
+            return None
+        return _clash_frame(self.spark.table(self._doc_table), key_rows, "doc_id")
+
+    def _persisted_key_rows(self, docs: DataFrame, stage: str) -> DataFrame:
+        return _fresh_persist(
+            f"{self.name}_{stage}_{self._suffixes[0]}",
+            _bucket_aligned(self._key_rows(docs), self.buckets, *self._keys),
+        )
+
+    def _write(self, docs: DataFrame, key_rows: DataFrame, mode: str) -> None:
+        key_rows.write.bucketBy(self.buckets, *self._keys).sortBy(*self._keys).mode(
+            mode
+        ).saveAsTable(self._key_table)
+        self._write_docs(self._doc_frame(docs, key_rows), mode)
+        self._write_counts(key_rows, mode)
+
+    def _write_docs(self, frame: DataFrame, mode: str) -> None:
+        _bucket_aligned(frame, self.buckets, "doc_id").write.bucketBy(
+            self.buckets, "doc_id"
+        ).mode(mode).saveAsTable(self._doc_table)
+
+    def _write_counts(self, key_rows: DataFrame, mode: str) -> None:
+        # partition-local + one file per bucket: ``key_rows`` is
+        # key-aligned (the persisted build/append frame, or the
+        # bucketed key table read in repair())
+        self._count_keys(key_rows).write.bucketBy(self.buckets, *self._keys).mode(
+            mode
+        ).saveAsTable(self._count_table)
+
+    def _tighten_ub(self) -> None:
+        _write_ub(
+            self.spark, self._count_table,
+            _exact_max(self.spark, self._count_table, self._keys),
+        )
+
+    def build(self, docs: DataFrame):
+        """Release-time build: write all three tables from scratch."""
+        for t in self._tables():
+            _clean_orphan_location(self.spark, t)
+        key_rows = self._persisted_key_rows(docs, "build")
+        # exact per-key max over the fresh index (one partition-local
+        # agg) — the probe pre-flight's skip bound; running it FIRST
+        # also populates the cache the writes share
+        ub = _exact_max(self.spark, self._count_table, self._keys, key_rows)
+        self._write(docs, key_rows, "overwrite")
+        # a table property (zero write jobs), so after the table exists
+        _write_ub(self.spark, self._count_table, ub)
+        return self
+
+    def append(self, crawl: DataFrame) -> None:
+        """Admit a crawl: append its key, doc and count rows under the
+        SAME bucket spec — no rebuild, no corpus-wide exchange. The
+        admission guard and this generation's per-key max ride ONE
+        tagged-union collect, which also fills the persisted cache;
+        see the subclass docstring for recovery if the job dies between
+        the writes."""
+        key_rows = self._persisted_key_rows(crawl, "append")
+        rows = _preflight_frame(
+            self._count_keys(key_rows).agg(F.max("n").alias("num")),
+            self._clash(key_rows),
+        ).collect()
+        gen_max = _preflight_dmax(rows, "doc_id", self._what("append"))
+        # the bound drifts conservative (stored max ≤ old max + this
+        # append's max; compact()/repair() re-tighten) and is written
+        # BEFORE the data writes so a mid-append crash can only leave
+        # it too high, never stale-low
+        prev = _read_ub(self.spark, self._count_table)
+        ub = None if prev is None else prev + gen_max
+        if ub is not None:
+            _write_ub(self.spark, self._count_table, ub)
+        self._write(crawl, key_rows, "append")
+        _settle_ub_after_append(self, self._count_table, self._keys, ub)
+
+    def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
+        """The crawl vs (index ∪ crawl). The crawl's keys merge into
+        the stored count sidecar before the cap filter, so a crawl
+        pushing a key over the cap suppresses it exactly as a rebuild
+        would."""
+        pending = self.prepare_probe(crawl)
+        return pending.finish(pending.checks.collect(), tau=tau)
+
+    def prepare_probe(self, crawl: DataFrame) -> PendingProbe:
+        """The probe split at its one driver action: ``.checks`` is the
+        lazy tagged-union pre-flight frame (admission guard + hot-skip
+        bound legs) and ``.finish(rows)`` builds the result plan from
+        the collected rows. probe() is exactly
+        ``finish(checks.collect())``; callers with their OWN 1-row
+        decisions to make (the stamped monthly job's fingerprint)
+        union extra legs onto ``.checks`` and collect once (kind
+        values 'dmax'/'clash' are reserved)."""
+        # the crawl's key rows feed every probe leg — persist the
+        # delta-bounded frame once. NOT bucket-aligned (unlike the
+        # writes): A/B'd — pinning the crawl to `buckets` partitions
+        # halves probe parallelism on a wide executor for no exchange
+        # saved that matters (the join re-exchanges only the crawl side)
+        delta = _fresh_persist(
+            f"{self.name}_probe_d{self._suffixes[0]}", self._key_rows(crawl)
+        )
+        checks = _preflight_frame(
+            self._count_keys(delta, "n_delta").agg(F.max("n_delta").alias("num")),
+            self._clash(delta),
+        )
+        return PendingProbe(
+            self, delta, self._doc_frame(crawl, delta), checks,
+            _read_ub(self.spark, self._count_table),
+        )
+
+    def _finish_probe_plan(
+        self,
+        delta: DataFrame,
+        delta_docs: DataFrame,
+        rows: list,
+        ub: int | None,
+        tau: float,
+    ) -> DataFrame:
+        # the common warm path (natural corpus, ub + crawl max well
+        # under cap) never touches the stored count sidecar
+        hot = None
+        if _preflight_verdict(rows, ub, self.cap, "doc_id", self._what("probe")):
+            hot = self._hot_keys(delta)
+            # natural corpora usually have NO over-cap key:
+            # short-circuit past the anti-joins
+            if not hot.head(1):
+                hot = None
+        # per-doc rows over the FULL corpus: the stored doc set and the
+        # crawl's are disjoint (guarded), so a plain union IS the
+        # corpus — a dropDuplicates would exchange the whole doc table
+        docs = self.spark.table(self._doc_table).unionByName(delta_docs)
+        return self._pairs(self.spark.table(self._key_table), delta, docs, hot, tau)
+
+    def _hot_keys(self, delta: DataFrame) -> DataFrame:
+        """Exact census merge: keys whose stored count + crawl count
+        exceeds the cap. NOT a union-then-groupBy: the union would
+        discard the sidecar's bucket layout and re-exchange the whole
+        count table per probe. Instead the stored side aggregates
+        partition-local on its buckets and the (crawl-bounded) delta
+        counts broadcast-join in; keys the crawl alone pushes over the
+        cap come from the second (tiny) leg. Evaluated EAGERLY by the
+        caller: a lazy census (broadcast build side + AQE empty
+        propagation) measured 5.2 → 9.9 s per invocation at sf1, and
+        restricting the stored agg to the delta's keys via an inner
+        broadcast join measured 1.12 s vs 0.84-1.08 s for this full
+        bucket-local agg."""
+        keys = list(self._keys)
+        delta_counts = self._count_keys(delta, "n_delta")
+        stored = self.spark.table(self._count_table).groupBy(*keys).agg(
+            F.sum("n").alias("n_stored")
+        )
+        return (
+            stored.join(F.broadcast(delta_counts), keys, "left_outer")
+            .filter(F.col("n_stored") + F.coalesce("n_delta", F.lit(0)) > self.cap)
+            .select(*keys)
+            .unionByName(delta_counts.filter(F.col("n_delta") > self.cap).select(*keys))
+            .dropDuplicates(keys)
+        )
+
+    def _cold(self, key_rows: DataFrame, hot: DataFrame | None) -> DataFrame:
+        """``key_rows`` without the hot keys."""
+        if hot is None:
+            return key_rows
+        return key_rows.join(F.broadcast(hot), list(self._keys), "left_anti")
+
+    def compact(self) -> None:
+        """Collapse the count sidecar to one row per key (the probe's
+        bucket-local SUM then scans keys, not appends×keys) and
+        re-tighten the pre-flight upper bound to the exact stored max
+        (append drift is one-directional — see append). The doc table
+        needs no compaction: doc sets are disjoint across appends
+        (guarded), so it is already one row per doc."""
+        _compact_counts(self.spark, self._count_table, list(self._keys), self.buckets)
+        self._tighten_ub()
+
+    def drop(self) -> None:
+        _drop(self.spark, *self._tables(), f"{self._count_table}_compact_tmp")
+
+
 @dataclass
-class PostingIndex:
+class PostingIndex(_CountSidecarIndex):
     """Exact-shingle posting index: ``{name}_post`` (doc_id, h;
     bucketBy(h)) + ``{name}_ns`` (per-doc distinct shingle counts;
     bucketBy(doc_id)) + ``{name}_hcount`` (per-key posting counts;
@@ -616,7 +848,7 @@ class PostingIndex:
     probe() = dedup_incremental's semantics against the stored index:
     per crawl doc, every index-or-crawl doc sharing ≥1 non-hot shingle
     and verifying at Jaccard ≥ tau, one row per ordered (new, match)
-    pair.
+    pair, as (new_id, match_id, jaccard).
 
     ``guard_overlap`` (default on) rejects crawls whose doc_ids already
     exist in the index — see _assert_disjoint. Durability: the postings
@@ -645,253 +877,36 @@ class PostingIndex:
     #: regime the exact-path probes are the correct cost.
     auto_compact_ub_frac: float | None = 0.75
 
-    @property
-    def _post(self) -> str:
-        return f"{self.name}_post"
+    _suffixes = ("post", "ns", "hcount")
+    _keys = ("h",)
+    _post = _CountSidecarIndex._key_table
+    _ns = _CountSidecarIndex._doc_table
+    _hcount = _CountSidecarIndex._count_table
 
-    @property
-    def _ns(self) -> str:
-        return f"{self.name}_ns"
+    def _key_rows(self, docs: DataFrame) -> DataFrame:
+        return _postings(docs)
 
-    @property
-    def _hcount(self) -> str:
-        return f"{self.name}_hcount"
+    def _doc_frame(self, docs: DataFrame | None, post: DataFrame) -> DataFrame:
+        # per-doc distinct shingle counts, derived from the postings
+        return post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
-    def exists(self) -> bool:
-        """All index tables present in the catalog — the guard a
-        stamped caller pairs with release_stamp before skipping a
-        build (a matching stamp with dropped tables must rebuild)."""
-        return all(
-            self.spark.catalog.tableExists(t)
-            for t in (self._post, self._ns, self._hcount)
-        )
-
-    def build(self, docs: DataFrame) -> "PostingIndex":
-        """Release-time build: write all three sidecars from scratch.
-        The postings frame is persisted ONCE so the three write jobs
-        share one tokenize/explode pass (ADVICE r8); the pre-flight
-        upper-bound aggregate MATERIALIZES the cache first, then the
-        three independent table writes run OVERLAPPED (r14, guide
-        §2.6 — previously four sequential driver actions)."""
-        for t in (self._post, self._ns, self._hcount):
-            _clean_orphan_location(self.spark, t)
-        # persisted ALREADY bucket-aligned: the postings write lands one
-        # file per bucket, and the hcount groupBy(h) below is
-        # partition-local on the same layout
-        post = _fresh_persist(
-            f"{self.name}_build_post",
-            _bucket_aligned(_postings(docs), self.buckets, "h"),
-        )
-        # exact per-key max over the fresh index (one partition-local
-        # agg) — the probe pre-flight's skip bound; running it FIRST
-        # also populates the cache the three writes below share
-        ub = _exact_max(self.spark, self._hcount, ["h"], post)
-        _run_overlapped(
-            lambda: post.write.bucketBy(self.buckets, "h")
-            .sortBy("h")
-            .mode("overwrite")
-            .saveAsTable(self._post),
-            lambda: self._write_ns(post, "overwrite"),
-            lambda: self._write_hcount(post, "overwrite"),
-        )
-        # stored as a table property (zero write jobs), AFTER the
-        # hcount table exists
-        _write_ub(self.spark, self._hcount, ub)
-        return self
-
-    def append(self, crawl: DataFrame) -> None:
-        """Admit a crawl: append its postings and sidecar rows under
-        the SAME bucket spec — no rebuild, no corpus-wide exchange.
-        Current per-key/per-doc counts are SUMs over appended rows,
-        partition-local on the bucket layout. The crawl's postings are
-        persisted once for the guard + three writes; see the class
-        docstring for recovery if the job dies mid-trio.
-
-        r14 wall shave (guide §2.1/§2.6): the admission guard and the
-        generation per-key max — previously two driver actions — ride
-        ONE tagged-union collect (the probe pre-flight recipe), which
-        also materializes the persisted crawl postings; the three
-        independent table writes then run OVERLAPPED."""
-        post = _fresh_persist(
-            f"{self.name}_append_post",
-            _bucket_aligned(_postings(crawl), self.buckets, "h"),
-        )
-        clash = (
-            _clash_frame(self.spark.table(self._ns), post, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        rows = _preflight_frame(
-            post.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("num")),
-            clash,
-        ).collect()
-        gen_max = _preflight_dmax(
-            rows, "doc_id", f"PostingIndex({self.name}).append"
-        )
-        # the bound drifts conservative (stored max ≤ old max + this
-        # append's max; compact()/repair() re-tighten) and is written
-        # BEFORE the data writes so a mid-append crash can only leave
-        # it too high, never stale-low
-        prev = _read_ub(self.spark, self._hcount)
-        ub = None if prev is None else prev + gen_max
-        if ub is not None:
-            _write_ub(self.spark, self._hcount, ub)
-        _run_overlapped(
-            lambda: post.write.bucketBy(self.buckets, "h")
-            .sortBy("h")
-            .mode("append")
-            .saveAsTable(self._post),
-            lambda: self._write_ns(post, "append"),
-            lambda: self._write_hcount(post, "append"),
-        )
-        _settle_ub_after_append(self, self._hcount, ["h"], ub)
-
-    def _write_ns(self, post: DataFrame, mode: str) -> None:
-        # ns changes keys (doc_id), so it aligns explicitly
-        _bucket_aligned(
-            post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")),
-            self.buckets,
-            "doc_id",
-        ).write.bucketBy(self.buckets, "doc_id").mode(mode).saveAsTable(self._ns)
-
-    def _write_hcount(self, post: DataFrame, mode: str) -> None:
-        # hcount's groupBy(h) inherits the caller's h-aligned layout
-        # (the persisted build/append frame, or the bucketed table read
-        # in repair()) and is already one partition per bucket
-        post.groupBy("h").agg(F.count(F.lit(1)).alias("n")).write.bucketBy(
-            self.buckets, "h"
-        ).mode(mode).saveAsTable(self._hcount)
-
-    def _write_sidecars(self, post: DataFrame, mode: str) -> None:
-        # repair()'s rebuild path — the two sidecar rewrites are
-        # independent, so they overlap too
-        _run_overlapped(
-            lambda: self._write_ns(post, mode),
-            lambda: self._write_hcount(post, mode),
-        )
-
-    def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
-        """(new_id, match_id, jaccard) for the crawl vs (index ∪ crawl).
-        The crawl's keys merge into the stored count sidecar before the
-        cap filter, so a crawl pushing a key over the cap suppresses it
-        exactly as a rebuild would."""
-        pending = self.prepare_probe(crawl)
-        return pending.finish(pending.checks.collect(), tau=tau)
-
-    def prepare_probe(self, crawl: DataFrame) -> "PendingProbe":
-        """The probe split at its one driver action: ``.checks`` is the
-        lazy tagged-union pre-flight frame (admission guard + hot-skip
-        bound legs — see _probe_preflight) and ``.finish(rows)`` builds
-        the result plan from the collected rows. probe() is exactly
-        ``finish(checks.collect())``; callers with their OWN 1-row
-        decisions to make (the stamped monthly job's fingerprint +
-        stamp read) union extra legs onto ``.checks`` and collect once
-        — the whole warm invocation then costs TWO driver actions
-        (r10; kind values 'dmax'/'ub'/'clash' are reserved)."""
-        # the crawl's postings feed SIX consumers (count merge, both
-        # cold sides, ns, hot arrays, the self-probe leg) — persist the
-        # delta-bounded frame once per probe
-        # NOT bucket-aligned (unlike the writes): A/B'd — pinning the
-        # crawl to `buckets` partitions halves probe parallelism on a
-        # wide executor for no exchange saved that matters (the join
-        # re-exchanges only the crawl side, which is delta-bounded)
-        delta_post = _fresh_persist(f"{self.name}_probe_dpost", _postings(crawl))
-        # an overlapping crawl would duplicate ns rows below and
-        # corrupt every Jaccard denominator silently (ADVICE r8); the
-        # guard's ≤5-row clash frame rides the same collect as the
-        # hot-census decision — one driver action, not two
-        clash = (
-            _clash_frame(self.spark.table(self._ns), delta_post, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        delta_counts = delta_post.groupBy("h").agg(
-            F.count(F.lit(1)).alias("n_delta")
-        )
-        checks = _preflight_frame(
-            delta_counts.agg(F.max("n_delta").alias("num")), clash
-        )
-        return PendingProbe(
-            self, delta_post, delta_counts, checks,
-            _read_ub(self.spark, self._hcount),
-        )
-
-    def _finish_probe_plan(
+    def _pairs(
         self,
+        index_post: DataFrame,
         delta_post: DataFrame,
-        delta_counts: DataFrame,
-        rows: list,
-        ub: int | None,
+        ns: DataFrame,
+        hot_keys: DataFrame | None,
         tau: float,
     ) -> DataFrame:
-        spark = self.spark
-        index_post = spark.table(self._post)
-        # pre-flight verdicts from the collected rows: admission guard
-        # + the ub-bound skip. The common warm path (natural
-        # corpus, ub + crawl max well under cap) never touches the
-        # stored count sidecar — previously EVERY probe aggregated it
-        # and broadcast-joined the delta counts just to learn the hot
-        # set is empty.
-        may_have_hot = _preflight_verdict(
-            rows, ub, self.cap, "doc_id", f"PostingIndex({self.name}).probe"
-        )
-        has_hot = False
-        hot_keys = None
-        if may_have_hot:
-            # exact census merge: current per-key counts = stored
-            # sidecar rows + delta rows. NOT a union-then-groupBy: the
-            # union would discard the sidecar's bucket layout and
-            # re-exchange the whole count table per probe. Instead the
-            # stored side aggregates partition-local on its buckets
-            # and the (crawl-bounded) delta counts broadcast-join in;
-            # keys the crawl alone pushes over the cap come from the
-            # second (tiny) leg. EAGER, kept after an r9 A/B: the lazy
-            # alternative (census as broadcast build side + AQE empty
-            # propagation) measured 5.2 → 9.9 s per invocation at sf1.
-            # A rejected r10 A/B is ledgered too: restricting the
-            # stored agg to the delta's keys via an inner broadcast
-            # join measured 1.12 s vs 0.84-1.08 s for this full
-            # bucket-local agg — the broadcast probe costs more than
-            # the aggregation it saves.
-            stored = spark.table(self._hcount).groupBy("h").agg(
-                F.sum("n").alias("n_stored")
-            )
-            hot_keys = (
-                stored.join(F.broadcast(delta_counts), "h", "left_outer")
-                .filter(
-                    F.col("n_stored") + F.coalesce("n_delta", F.lit(0)) > self.cap
-                )
-                .select("h")
-                .unionByName(
-                    delta_counts.filter(F.col("n_delta") > self.cap).select("h")
-                )
-                .dropDuplicates(["h"])
-            )
-            has_hot = bool(hot_keys.head(1))
-        cold_index = (
-            index_post.join(F.broadcast(hot_keys), "h", "left_anti")
-            if has_hot
-            else index_post
-        )
-        cold_delta = (
-            delta_post.join(F.broadcast(hot_keys), "h", "left_anti")
-            if has_hot
-            else delta_post
-        )
-        # per-doc totals over the FULL corpus: the stored sidecar's doc
-        # set and the crawl's are disjoint, so union IS the total
-        ns = spark.table(self._ns).unionByName(
-            delta_post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        )
         # hot add-back: per-doc over-cap arrays so surviving pairs
         # report the TRUE shared count (dedup_incremental's recipe)
         hot = (
-            _hot_doc_arrays(index_post.unionByName(delta_post), hot_keys)
-            if has_hot
-            else None
+            None
+            if hot_keys is None
+            else _hot_doc_arrays(index_post.unionByName(delta_post), hot_keys)
         )
+        cold_index = self._cold(index_post, hot_keys)
+        cold_delta = self._cold(delta_post, hot_keys)
         # Delta-delta completeness WITHOUT moving the corpus: the
         # registered query unions delta into the `o` side, which is
         # fine for an in-plan index but would re-exchange the stored
@@ -905,22 +920,12 @@ class PostingIndex:
         # intersection count is complete within its leg). The legs
         # union as RAW pair counts so the ns joins + tau filter run
         # once — finished-leg union paid 4 broadcast stages where 2
-        # suffice (r10; the index is narrow, so broadcast-stage count
+        # suffice (the index is narrow, so broadcast-stage count
         # dominates probe wall at bench scale).
         pairs = _probe_pair_counts(cold_index, cold_delta).unionByName(
             _probe_pair_counts(cold_delta, cold_delta)
         )
         return _finish_probe(pairs, ns, hot, tau=tau).orderBy("new_id", "match_id")
-
-    def compact(self) -> None:
-        """Collapse the per-key count sidecar to one row per key (the
-        probe's bucket-local SUM then scans keys, not appends×keys).
-        ``_ns`` needs no compaction: doc sets are disjoint across
-        appends (guarded), so it is already one row per doc. Also
-        re-tightens the probe pre-flight's upper bound to the exact
-        stored max (append drift is one-directional — see append)."""
-        _compact_counts(self.spark, self._hcount, ["h"], self.buckets)
-        _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
 
     def reconcile(self) -> dict[str, int | bool]:
         """Consistency check for a suspected partial append: both
@@ -944,21 +949,14 @@ class PostingIndex:
         bucket layout; the ns rewrite is the one full exchange
         (groupBy doc_id over a bucketed-by-h table), acceptable for a
         one-off recovery."""
-        self._write_sidecars(self.spark.table(self._post), mode="overwrite")
-        _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
-
-    def drop(self) -> None:
-        _drop(
-            self.spark,
-            self._post,
-            self._ns,
-            self._hcount,
-            f"{self._hcount}_compact_tmp",
-        )
+        post = self.spark.table(self._post)
+        self._write_docs(self._doc_frame(None, post), "overwrite")
+        self._write_counts(post, "overwrite")
+        self._tighten_ub()
 
 
 @dataclass
-class BandIndex:
+class BandIndex(_CountSidecarIndex):
     """MinHash/LSH band index: ``{name}_bands`` (doc_id, band, bucket;
     bucketBy(band, bucket)) + ``{name}_sh`` (shingle arrays for the
     exact-Jaccard verify; bucketBy(doc_id)) + ``{name}_bcount``
@@ -983,181 +981,33 @@ class BandIndex:
     #: bound-based auto-compact — see PostingIndex.auto_compact_ub_frac
     auto_compact_ub_frac: float | None = 0.75
 
-    @property
-    def _bands(self) -> str:
-        return f"{self.name}_bands"
+    _suffixes = ("bands", "sh", "bcount")
+    _keys = ("band", "bucket")
+    _bands = _CountSidecarIndex._key_table
+    _sh = _CountSidecarIndex._doc_table
+    _bcount = _CountSidecarIndex._count_table
 
-    @property
-    def _sh(self) -> str:
-        return f"{self.name}_sh"
+    def _key_rows(self, docs: DataFrame) -> DataFrame:
+        # postings via the inline-explode shape (_postings docstring)
+        return _band_table(minhash_signatures_agg(_postings(docs)))
 
-    @property
-    def _bcount(self) -> str:
-        return f"{self.name}_bcount"
+    def _doc_frame(self, docs: DataFrame, bands: DataFrame) -> DataFrame:
+        # the shingle-ARRAY frame is its own lineage from the docs —
+        # never explode the aliased array
+        return shingle_table(docs)
 
-    def _band_rows(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        # postings via the inline-explode shape (_postings docstring);
-        # the shingle-ARRAY frame is built separately for the verify
-        # sidecar — never explode the aliased array
-        post = _postings(docs)
-        return _band_table(minhash_signatures_agg(post)), shingle_table(docs)
+    def _pairs(
+        self,
+        index_bands: DataFrame,
+        delta_bands: DataFrame,
+        sh: DataFrame,
+        big: DataFrame | None,
+        tau: float,
+    ) -> DataFrame:
+        kept_index = self._cold(index_bands, big)
+        kept_delta = self._cold(delta_bands, big)
 
-    def exists(self) -> bool:
-        """See PostingIndex.exists."""
-        return all(
-            self.spark.catalog.tableExists(t)
-            for t in (self._bands, self._sh, self._bcount)
-        )
-
-    def build(self, docs: DataFrame) -> "BandIndex":
-        # persist the band rows so the bands write + count write share
-        # one tokenize/minhash pass (ADVICE r8); the sh sidecar is a
-        # different lineage (arrays, not postings) and writes once
-        for t in (self._bands, self._sh, self._bcount):
-            _clean_orphan_location(self.spark, t)
-        bands, sh = self._band_rows(docs)
-        bands = _fresh_persist(
-            f"{self.name}_build_bands",
-            _bucket_aligned(bands, self.buckets, "band", "bucket"),
-        )
-        # pre-flight bound agg first (materializes the band cache),
-        # then the three independent writes run OVERLAPPED (r14 —
-        # same shape as PostingIndex.build)
-        ub = _exact_max(self.spark, self._bcount, ["band", "bucket"], bands)
-        _run_overlapped(
-            lambda: bands.write.bucketBy(self.buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("overwrite")
-            .saveAsTable(self._bands),
-            lambda: _bucket_aligned(sh, self.buckets, "doc_id")
-            .write.bucketBy(self.buckets, "doc_id")
-            .mode("overwrite")
-            .saveAsTable(self._sh),
-            lambda: self._write_counts(bands, mode="overwrite"),
-        )
-        _write_ub(self.spark, self._bcount, ub)
-        return self
-
-    def append(self, crawl: DataFrame) -> None:
-        bands, sh = self._band_rows(crawl)
-        bands = _fresh_persist(
-            f"{self.name}_append_bands",
-            _bucket_aligned(bands, self.buckets, "band", "bucket"),
-        )
-        # guard + generation max fused into ONE collect (r14 — see
-        # PostingIndex.append); materializes the band cache too
-        clash = (
-            _clash_frame(self.spark.table(self._sh), bands, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        rows = _preflight_frame(
-            bands.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("num")),
-            clash,
-        ).collect()
-        gen_max = _preflight_dmax(
-            rows, "doc_id", f"BandIndex({self.name}).append"
-        )
-        # drifted bound written BEFORE the data writes (crash-sound)
-        # and re-tightened by compact()/repair()
-        prev = _read_ub(self.spark, self._bcount)
-        ub = None if prev is None else prev + gen_max
-        if ub is not None:
-            _write_ub(self.spark, self._bcount, ub)
-        _run_overlapped(
-            lambda: bands.write.bucketBy(self.buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("append")
-            .saveAsTable(self._bands),
-            lambda: _bucket_aligned(sh, self.buckets, "doc_id")
-            .write.bucketBy(self.buckets, "doc_id")
-            .mode("append")
-            .saveAsTable(self._sh),
-            lambda: self._write_counts(bands, mode="append"),
-        )
-        _settle_ub_after_append(self, self._bcount, ["band", "bucket"], ub)
-
-    def _write_counts(self, bands: DataFrame, mode: str) -> None:
-        # partition-local + one file per bucket: the caller's frame is
-        # (band, bucket)-aligned (persisted build/append frame or the
-        # bucketed table read in repair())
-        bands.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        ).write.bucketBy(self.buckets, "band", "bucket").mode(mode).saveAsTable(
-            self._bcount
-        )
-
-    def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
-        spark = self.spark
-        delta_bands, delta_sh = self._band_rows(crawl)
-        # band rows feed the count merge, both cands legs' delta side;
-        # persist the delta-bounded frame once per probe
-        delta_bands = _fresh_persist(f"{self.name}_probe_dbands", delta_bands)
-        # overlap would double doc rows in the sh union below (no
-        # dropDuplicates there by design — see that comment); the ≤5-row
-        # clash frame collects together with the hot-bucket decision —
-        # one driver action, not two (r10)
-        clash = (
-            _clash_frame(spark.table(self._sh), delta_bands, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        index_bands = spark.table(self._bands)
-        delta_counts = delta_bands.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n_delta")
-        )
-        # ONE pre-flight action: admission guard + the ub-bound
-        # hot-bucket skip (see PostingIndex.prepare_probe)
-        rows = _preflight_frame(
-            delta_counts.agg(F.max("n_delta").alias("num")), clash
-        ).collect()
-        may_have_hot = _preflight_verdict(
-            rows,
-            _read_ub(spark, self._bcount),
-            self.cap,
-            "doc_id",
-            f"BandIndex({self.name}).probe",
-        )
-        has_hot = False
-        big = None
-        if may_have_hot:
-            # same bucket-local + broadcast count merge as
-            # PostingIndex.probe's exact path
-            stored = spark.table(self._bcount).groupBy("band", "bucket").agg(
-                F.sum("n").alias("n_stored")
-            )
-            big = (
-                stored.join(
-                    F.broadcast(delta_counts), ["band", "bucket"], "left_outer"
-                )
-                .filter(
-                    F.col("n_stored") + F.coalesce("n_delta", F.lit(0)) > self.cap
-                )
-                .select("band", "bucket")
-                .unionByName(
-                    delta_counts.filter(F.col("n_delta") > self.cap).select(
-                        "band", "bucket"
-                    )
-                )
-                .dropDuplicates(["band", "bucket"])
-            )
-            # natural corpora usually have NO over-cap bucket:
-            # short-circuit past both anti-joins (ADVICE r8)
-            has_hot = bool(big.head(1))
-        kept_index = (
-            index_bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-            if has_hot
-            else index_bands
-        )
-        kept_delta = (
-            delta_bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-            if has_hot
-            else delta_bands
-        )
-
-        # same two-leg split as PostingIndex.probe: crawl-vs-table (the
+        # same two-leg split as PostingIndex: crawl-vs-table (the
         # bucketed side never shuffles) + crawl-vs-crawl (bounded by the
         # crawl) — the union is the full candidate set
         def cand(o_side: DataFrame) -> DataFrame:
@@ -1177,23 +1027,7 @@ class BandIndex:
             .unionByName(cand(kept_delta))
             .dropDuplicates(["new_id", "match_id"])
         )
-        # plain union, NO dropDuplicates: the stored table holds one row
-        # per doc and appends are guarded disjoint, so deduping here
-        # would pay a corpus-wide exchange of the shingle sidecar on
-        # every probe to remove rows that cannot exist (r9 scale fix —
-        # the dedup discarded the table's bucket layout)
-        sh = spark.table(self._sh).unionByName(delta_sh)
         return _jaccard_verify(cands, sh, "new_id", "match_id", tau=tau)
-
-    def compact(self) -> None:
-        """Collapse the per-bucket count sidecar to one row per
-        (band, bucket) — see PostingIndex.compact. Re-tightens the
-        pre-flight upper bound to the exact stored max."""
-        _compact_counts(self.spark, self._bcount, ["band", "bucket"], self.buckets)
-        _write_ub(
-            self.spark, self._bcount,
-            _exact_max(self.spark, self._bcount, ["band", "bucket"]),
-        )
 
     def reconcile(self) -> dict[str, int | bool]:
         """``_bcount`` must account for exactly the band table's rows
@@ -1218,20 +1052,8 @@ class BandIndex:
         repaired from the index alone — re-append the missing crawl's
         rows or rebuild; the docstring IS the documented recovery
         contract (ADVICE r8)."""
-        self._write_counts(self.spark.table(self._bands), mode="overwrite")
-        _write_ub(
-            self.spark, self._bcount,
-            _exact_max(self.spark, self._bcount, ["band", "bucket"]),
-        )
-
-    def drop(self) -> None:
-        _drop(
-            self.spark,
-            self._bands,
-            self._sh,
-            self._bcount,
-            f"{self._bcount}_compact_tmp",
-        )
+        self._write_counts(self.spark.table(self._bands), "overwrite")
+        self._tighten_ub()
 
 
 @dataclass

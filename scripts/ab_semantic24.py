@@ -1,5 +1,6 @@
 """VERDICT r10 ask #4: SemanticRelease append-drift study — the
-24-append analog of scripts/ab_compact24.py for the semantic modality.
+24-append analog of the PostingIndex/BandIndex compact() study
+(BENCH_SF1.md) for the semantic modality.
 
 PostingIndex/BandIndex have the 24-append table and a wired
 auto-compact; SemanticRelease's contract says "re-release when the

@@ -468,6 +468,17 @@ def test_append_after_compact_still_equals_rebuild(spark, cls):
         rebuilt.drop()
 
 
+def _delete_stamp(spark, name):
+    """Remove the release-stamp sidecar file and check its ``.crc``
+    checksum twin goes with it."""
+    from overturelink_data_pipeline_spark.operators.lifecycle import _stamp_file
+
+    path, fs = _stamp_file(spark, name)
+    fs.delete(path, False)
+    crc = spark._jvm.org.apache.hadoop.fs.Path(path.getParent(), f".{path.getName()}.crc")
+    assert not fs.exists(path) and not fs.exists(crc)
+
+
 def test_release_stamp_idempotence(spark):
     """The stamp makes release maintenance idempotent: same fingerprint
     → skip; changed corpus → different fingerprint; stamp absent until
@@ -497,4 +508,4 @@ def test_release_stamp_idempotence(spark):
         write_release_stamp(spark, name, fp_b)  # re-stamp after change
         assert release_stamp(spark, name) == fp_b
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_meta")
+        _delete_stamp(spark, name)

@@ -95,6 +95,17 @@ def test_compact_clears_foreign_orphan_tmp_dir(spark):
 # ---------------------------------------------------------------------------
 
 
+def _delete_stamp(spark, name):
+    """Remove the release-stamp sidecar file and check its ``.crc``
+    checksum twin goes with it."""
+    from overturelink_data_pipeline_spark.operators.lifecycle import _stamp_file
+
+    path, fs = _stamp_file(spark, name)
+    fs.delete(path, False)
+    crc = spark._jvm.org.apache.hadoop.fs.Path(path.getParent(), f".{path.getName()}.crc")
+    assert not fs.exists(path) and not fs.exists(crc)
+
+
 def test_release_current_matches_two_step_protocol(spark):
     name = temp_name("rc")
     docs = _docs(spark, RELEASE())
@@ -114,7 +125,7 @@ def test_release_current_matches_two_step_protocol(spark):
         stamp3, current3 = release_current(spark, name, changed, "doc_id", "text")
         assert not current3 and stamp3 != stamp
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_meta")
+        _delete_stamp(spark, name)
 
 
 def test_fused_stamp_leg_format(spark):
@@ -136,6 +147,19 @@ def test_fused_stamp_leg_format(spark):
         leg = fingerprint_leg(docs, ("doc_id", "text")).first()
         assert leg["kind"] == "fp" and leg["num"] is None
         assert leg["id"] == py, (leg["id"], py)
+
+
+def test_empty_corpus_stamp(spark):
+    """An empty corpus still gets a stamp string (its hash sum is 0, not
+    NULL), the same from the Python and the fused-leg entry points."""
+    from overturelink_data_pipeline_spark.operators.lifecycle import (
+        fingerprint_leg,
+    )
+
+    docs = _docs(spark, [])
+    fp = corpus_fingerprint(docs, "doc_id", "text")
+    assert fp == "v1:0:0"
+    assert fingerprint_leg(docs, ("doc_id", "text")).first()["id"] == fp
 
 
 def test_prepare_probe_equals_probe(spark):

@@ -120,6 +120,32 @@ def test_reaper_spares_live_pids(spark):
         shutil.rmtree(dead, ignore_errors=True)
 
 
+def test_reaper_removes_dead_pid_stamp_files(spark):
+    """Stamp sidecars are FILES, and their ``.crc`` checksum twins are
+    hidden files: the reaper removes both for a dead pid and leaves a
+    live pid's stamp alone."""
+    from overturelink_data_pipeline_spark.operators import lifecycle
+
+    root = _warehouse_root(spark)
+    base = "reapstamp_idx"
+    live = os.path.join(root, f"{base}_p{os.getpid()}_stamp")
+    dead = os.path.join(root, f"{base}_p99999998_stamp")
+    dead_crc = os.path.join(root, f".{base}_p99999998_stamp.crc")
+    for f in (live, dead, dead_crc):
+        with open(f, "wb") as fh:
+            fh.write(b"stamp")
+    try:
+        lifecycle._REAPED.discard(base)
+        lifecycle.reap_dead_process_indexes(spark, base)
+        assert os.path.exists(live)
+        assert not os.path.exists(dead)
+        assert not os.path.exists(dead_crc)
+    finally:
+        for f in (live, dead, dead_crc):
+            if os.path.exists(f):
+                os.remove(f)
+
+
 def test_lifecycle_warm_path_still_skips_rebuild(spark, sf_dir):
     """Within one process the stamp-skip warm path must survive the
     namespace change: second invocation probes, never rebuilds."""
