@@ -15,7 +15,7 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -172,6 +172,45 @@ def st_bbox(s: pd.Series) -> pd.DataFrame:
         xmin, xmax, ymin, ymax = G.bbox(g)
         rows.append((xmin, xmax, ymin, ymax))
     return pd.DataFrame(rows, columns=["xmin", "xmax", "ymin", "ymax"])
+
+
+def observe_extent(
+    df: DataFrame, *, bbox_col: str | None = None, geometry_col: str = "geometry"
+) -> tuple[DataFrame, Callable[[], tuple[int, list | None]]]:
+    """Feature count and bbox of ``df``, observed while it is written.
+
+    Returns the frame to write and a function to call after the write,
+    which gives ``(count, [xmin, ymin, xmax, ymax])``: the numbers
+    describe exactly the rows written, with no second job. The envelope
+    is the ``bbox_col`` struct when given (no UDF), else ``st_bbox`` of
+    ``geometry_col``, run inside the write. The bbox is None when there
+    is no envelope column or every envelope is NULL (an all-NULL
+    geometry frame still has rows, and a [null]*4 bbox is invalid
+    sidecar metadata)."""
+    obs = Observation()
+    env = bbox_col
+    if env is None and geometry_col in df.columns:
+        env = "_geo_env"
+        df = df.withColumn(env, st_bbox(F.col(geometry_col)))
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if env is not None:
+        metrics += [
+            F.min(f"{env}.xmin").alias("xmin"),
+            F.min(f"{env}.ymin").alias("ymin"),
+            F.max(f"{env}.xmax").alias("xmax"),
+            F.max(f"{env}.ymax").alias("ymax"),
+        ]
+    out = df.observe(obs, *metrics)
+    if env == "_geo_env":
+        out = out.drop(env)
+
+    def result() -> tuple[int, list | None]:
+        row = obs.get
+        if env is None or row["xmin"] is None:
+            return int(row["n"]), None
+        return int(row["n"]), [row["xmin"], row["ymin"], row["xmax"], row["ymax"]]
+
+    return out, result
 
 
 def st_intersects_with(clip_wkb: bytes):

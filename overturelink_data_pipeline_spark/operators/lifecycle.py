@@ -235,6 +235,11 @@ def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
             continue
         pid = int(m.group("pid"))
         if pid == me:
+            # A dead predecessor that ran under this recycled pid left
+            # entries that look like ours. They stay until this
+            # process's own rebuild clears them (_clean_orphan_location).
+            # That is leftover garbage only, never a wrong skip: exists()
+            # reads this process's in-memory catalog, not these files.
             continue
         try:
             os.kill(pid, 0)

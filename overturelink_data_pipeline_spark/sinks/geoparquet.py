@@ -2,7 +2,9 @@
 
 Distributed zstd parquet write of the WKB-geometry frame, plus a JSON
 sidecar carrying the geo column metadata (geometry column name,
-encoding, CRS, bbox) computed in ONE aggregate job. The sidecar
+encoding, CRS, bbox). The feature count and bbox are observed on the
+frame as it is written (a ``pyspark.sql.Observation``), so the write
+job is the only job and the envelope UDF runs inside it. The sidecar
 mirrors what the GeoParquet spec stores in the parquet footer "geo"
 key — Spark's writer can't inject custom footer metadata without a
 JVM extension, and the sidecar keeps the engine dependency-free while
@@ -22,9 +24,8 @@ import json
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from overturelink_data_pipeline_spark.geo.functions import st_bbox
+from overturelink_data_pipeline_spark.geo.functions import observe_extent
 
 
 def write_geoparquet(
@@ -33,35 +34,17 @@ def write_geoparquet(
     *,
     geometry_col: str = "geometry",
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> dict:
-    """Distributed write + geo sidecar; returns the sidecar dict."""
-    writer = df.write.mode(mode).option("compression", "zstd")
+    """Distributed overwrite + geo sidecar; returns the sidecar dict.
+
+    There is no append mode: the sidecar is observed on the frame being
+    written, so after an append it would describe only the new rows."""
+    df, extent = observe_extent(df, geometry_col=geometry_col)
+    writer = df.write.mode("overwrite").option("compression", "zstd")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-    written = df.sparkSession.read.parquet(path)
-    if geometry_col in written.columns:
-        b = written.select(st_bbox(F.col(geometry_col)).alias("b")).select(
-            F.min("b.xmin").alias("xmin"),
-            F.min("b.ymin").alias("ymin"),
-            F.max("b.xmax").alias("xmax"),
-            F.max("b.ymax").alias("ymax"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        row = b.collect()[0]
-        # rows may exist with every geometry NULL — the min/max then
-        # aggregate to None and a [null]*4 bbox is invalid sidecar
-        # metadata (same guard as sources/cache.py)
-        bbox = (
-            [row["xmin"], row["ymin"], row["xmax"], row["ymax"]]
-            if row["n"] and row["xmin"] is not None
-            else None
-        )
-        count = int(row["n"])
-    else:
-        bbox, count = None, written.count()
+    count, bbox = extent()
 
     meta = {
         "version": "1.0.0",

@@ -12,8 +12,9 @@ read (source.py:1464-1481). Getting this wrong silently truncates
 results for any query whose filter differs from the cached one.
 
 Scale notes: the cache write is a plain distributed parquet write
-(zstd); the sidecar's count/bbox come from ONE aggregate job over the
-per-row bbox struct — never a driver-side collect of the data.
+(zstd); the sidecar's count/bbox are observed on the frame inside that
+write job (per-row bbox struct, or the geometry envelope for projected
+frames) — never a read-back job or a driver-side collect of the data.
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ from dataclasses import asdict, dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from overturelink_data_pipeline_spark.geo.functions import observe_extent
 from overturelink_data_pipeline_spark.plans.overture import (
     SECTOR_NAMES,
     expected_columns,
@@ -102,48 +103,23 @@ def write_cache(
         # into a single task; the round-robin shuffle keeps the expensive
         # upstream parallel and only funnels the bounded country output
         df = df.repartition(partitions)
+    # count + bbox are observed on the exact frame written, after the
+    # repartition: observed below the shuffle, they cost about 1 s more
+    # task time per perfbench country_export sequence (4-core local[4]).
+    # Projected frames drop the bbox struct; their envelope comes from
+    # geometry.
+    df, extent = observe_extent(
+        df, bbox_col="bbox" if "bbox" in df.columns else None
+    )
     df.write.mode("overwrite").option("compression", "zstd").parquet(parquet_path)
-    # count + bbox in one aggregate over the written data (re-read so
-    # the numbers describe exactly what landed on disk)
-    spark = df.sparkSession
-    written = spark.read.parquet(parquet_path)
-    agg_cols = [F.count(F.lit(1)).alias("n")]
-    has_bbox = "bbox" in written.columns
-    if has_bbox:
-        agg_cols += [
-            F.min("bbox.xmin").alias("xmin"),
-            F.min("bbox.ymin").alias("ymin"),
-            F.max("bbox.xmax").alias("xmax"),
-            F.max("bbox.ymax").alias("ymax"),
-        ]
-    if not has_bbox and "geometry" in written.columns:
-        # projected frames drop the bbox struct — recompute the
-        # envelope from geometry (one UDF pass inside the same agg job)
-        from overturelink_data_pipeline_spark.geo.functions import st_bbox
-
-        written = written.withColumn("_env", st_bbox(F.col("geometry")))
-        agg_cols += [
-            F.min("_env.xmin").alias("xmin"),
-            F.min("_env.ymin").alias("ymin"),
-            F.max("_env.xmax").alias("xmax"),
-            F.max("_env.ymax").alias("ymax"),
-        ]
-        has_bbox = True
-    row = written.agg(*agg_cols).collect()[0]
+    count, bbox = extent()
     meta = CacheMetadata(
         country=country,
         theme=theme,
         type=type_,
         release=release,
-        feature_count=int(row["n"]),
-        bbox=(
-            [float(row["xmin"]), float(row["ymin"]), float(row["xmax"]), float(row["ymax"])]
-            # all-null geometries aggregate to null extents even with
-            # rows present — float(None) would crash AFTER the parquet
-            # landed, stranding data without its sidecar
-            if has_bbox and row["n"] > 0 and row["xmin"] is not None
-            else None
-        ),
+        feature_count=count,
+        bbox=None if bbox is None else [float(v) for v in bbox],
         cached_at=datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
     )
     with open(_meta_path(parquet_path), "w") as f:

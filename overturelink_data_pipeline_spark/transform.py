@@ -384,18 +384,31 @@ def add_sector_layers(layers: dict[str, DataFrame]) -> dict[str, DataFrame]:
     tagged ``feature_type='building_centroid'``, and union with the
     places layer into ``places_combined``.
 
-    Pure plan composition — the centroid UDF is the only Python stage
-    and runs Arrow-batched; the union is `unionByName` with missing
-    columns allowed (reference pd.concat ignore_index semantics,
+    The ``places`` and ``buildings`` inputs are persisted and returned
+    in place of the caller's frames, so writing all three layers runs
+    each input's scan, clip and clean once: ``places_combined`` reads
+    the two caches. The persist is keyed; the next call releases it.
+    The centroid UDF is the only added Python stage and runs
+    Arrow-batched; the union is `unionByName` with missing columns
+    allowed (reference pd.concat ignore_index semantics,
     cli.py:2352-2359).
     """
     from overturelink_data_pipeline_spark.geo.functions import st_centroid_utm
+    from overturelink_data_pipeline_spark.operators.dedup import _fresh_persist
 
     if "places" not in layers or "buildings" not in layers:
         return layers
-    places, buildings = layers["places"], layers["buildings"]
+    places = _fresh_persist("sector_places", layers["places"])
+    buildings = _fresh_persist("sector_buildings", layers["buildings"])
+    # non-deterministic so the NULL filter below cannot duplicate the
+    # UDF into a second ArrowEvalPython node (see st_clean_geometry).
+    # asNondeterministic mutates its UDF, so flag a private copy and
+    # leave the shared st_centroid_utm deterministic for other callers.
+    centroid = F.pandas_udf(
+        st_centroid_utm.func, st_centroid_utm.returnType
+    ).asNondeterministic()
     centroids = (
-        buildings.withColumn("geometry", st_centroid_utm(F.col("geometry")))
+        buildings.withColumn("geometry", centroid(F.col("geometry")))
         # the centroid kernel can return NULL (degenerate input); the
         # non-null-geometry invariant every sink assumes must be
         # re-established after ANY geometry UDF, same as the normalizers
@@ -403,7 +416,7 @@ def add_sector_layers(layers: dict[str, DataFrame]) -> dict[str, DataFrame]:
         .withColumn("feature_type", F.lit("building_centroid"))
     )
     combined = places.unionByName(centroids, allowMissingColumns=True)
-    out = dict(layers)
+    out = dict(layers, places=places, buildings=buildings)
     out["places_combined"] = combined
     return out
 

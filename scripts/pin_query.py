@@ -5,23 +5,32 @@ plus the bench's fixed Spark calibration job so a degraded-box sample
 is recognizable. ROUND-ROBIN over the query list (not per-query
 batches) so a box drift mid-session hits all queries equally.
 
-Usage: python scripts/pin_query.py <sf_dir> <rounds> <query> [query ...]
+Usage: python scripts/pin_query.py [--cpus N] <sf_dir> <rounds> <query> [query ...]
+
+``--cpus`` (default: this machine's CPU count) sizes each child's
+local Spark session.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import subprocess
 import sys
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
-import sys, time, json
-sys.path.insert(0, "/root/repo")
+import os, sys, time, json
+name, sf, root, cpus = sys.argv[1:5]
+sys.path.insert(0, root)
+# the Python UDF workers inherit the environment, not sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
 from overturelink_data_pipeline_spark.session import get_spark
 from overturelink_data_pipeline_spark import registry
 registry.load_all()
-spark = get_spark(app_name="pin-child", cpus="32")
-name, sf = sys.argv[1], sys.argv[2]
+spark = get_spark(app_name="pin-child", cpus=cpus)
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
@@ -40,14 +49,18 @@ print("CHILD_RESULT " + json.dumps({"first_s": first, "calib_s": calib}))
 
 
 def main() -> None:
-    sf = sys.argv[1]
-    rounds = int(sys.argv[2])
-    names = sys.argv[3:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("rounds", type=int)
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
+    args = ap.parse_args()
+    sf, rounds, names = args.sf_dir, args.rounds, args.queries
     results: dict[str, list] = {n: [] for n in names}
     for r in range(rounds):
         for name in names:
             out = subprocess.run(
-                [sys.executable, "-c", _CHILD, name, sf],
+                [sys.executable, "-c", _CHILD, name, sf, REPO_ROOT, str(args.cpus)],
                 capture_output=True,
                 text=True,
                 timeout=900,

@@ -283,6 +283,93 @@ def test_geoparquet_sidecar(spark, tmp_path):
     assert spark.read.parquet(path).count() == meta["feature_count"]
 
 
+def _sidecar_frames(spark):
+    """A fixture frame, a projected one without the bbox struct, a
+    zero-row frame and an all-NULL-geometry frame (same schema)."""
+    df = FX.fixture_df(spark, "places_place").select("id", "bbox", "geometry")
+    nulls = df.withColumn("bbox", F.lit(None).cast(df.schema["bbox"].dataType))
+    return {
+        "fixture": df,
+        "projected": df.select("id", "geometry"),
+        "empty": spark.createDataFrame([], df.schema),
+        "null_geometry": nulls.withColumn("geometry", F.lit(None).cast("binary")),
+    }
+
+
+def _read_back(spark, path, envelope):
+    """Count and bbox aggregated over the written files, the way the
+    sidecars must describe them."""
+    from overturelink_data_pipeline_spark.geo.functions import st_bbox
+
+    written = spark.read.parquet(path)
+    if envelope == "geometry":
+        written = written.withColumn("bbox", st_bbox(F.col("geometry")))
+    r = written.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("bbox.xmin").alias("xmin"),
+        F.min("bbox.ymin").alias("ymin"),
+        F.max("bbox.xmax").alias("xmax"),
+        F.max("bbox.ymax").alias("ymax"),
+    ).first()
+    bbox = None if r["xmin"] is None else [r["xmin"], r["ymin"], r["xmax"], r["ymax"]]
+    return r["n"], bbox
+
+
+def _jobs_submitted(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"sidecar-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", ["fixture", "projected", "empty", "null_geometry"])
+def test_geoparquet_sidecar_matches_read_back(spark, tmp_path, case):
+    """The observed sidecar equals an explicit aggregate over the
+    written files, and the sink runs no job beyond the write itself."""
+    df = _sidecar_frames(spark)[case]
+    path = str(tmp_path / "gp")
+    meta, jobs = _jobs_submitted(spark, lambda: write_geoparquet(df, path))
+    n, bbox = _read_back(spark, path, "geometry")
+    assert meta["feature_count"] == n
+    assert meta["columns"]["geometry"]["bbox"] == bbox
+    with open(os.path.join(path, "_geo_metadata.json")) as f:
+        assert json.load(f) == meta
+    _, plain = _jobs_submitted(
+        spark, lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain"))
+    )
+    assert jobs <= plain
+
+
+@pytest.mark.parametrize("case", ["fixture", "projected", "empty", "null_geometry"])
+def test_cache_sidecar_matches_read_back(spark, tmp_path, case):
+    """Same contract for the country cache: bbox from the bbox struct
+    when the frame has one, else from the geometry envelope."""
+    df = _sidecar_frames(spark)[case]
+    path = str(tmp_path / "XX_places.parquet")
+    meta, jobs = _jobs_submitted(
+        spark,
+        lambda: cache_mod.write_cache(
+            df, path, country="XX", theme="places", type_="place", release="r1"
+        ),
+    )
+    n, bbox = _read_back(spark, path, "bbox" if "bbox" in df.columns else "geometry")
+    assert meta.feature_count == n
+    assert meta.bbox == bbox
+    # the same frame write_cache writes: one file per country
+    _, plain = _jobs_submitted(
+        spark,
+        lambda: df.repartition(1).write.mode("overwrite").parquet(str(tmp_path / "plain")),
+    )
+    assert jobs <= plain
+
+
 def test_gpkg_roundtrip(spark, tmp_path):
     """Write → stdlib-sqlite3 read-back parity: row count, attribute
     values, exact WKB bytes, spec metadata tables, aggregate extents."""

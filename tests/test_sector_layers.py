@@ -134,3 +134,50 @@ def test_confidence_drift_string_nulls_not_throws(spark):
     )
     rows = {r["id"]: r["confidence"] for r in normalize_places(df).collect()}
     assert rows["a"] is None and rows["b"] == 0.75
+
+
+def _union_branches(plan: str) -> list[list[str]]:
+    """The lines of each direct child subtree of the plan's Union node;
+    a node's depth is where its name starts after the tree prefix."""
+    import re
+
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    u = next(i for i, ln in enumerate(lines) if re.match(r"Union\b", ln.lstrip(" :+-")))
+    branches: list[list[str]] = []
+    for ln in lines[u + 1:]:
+        if depth(ln) <= depth(lines[u]):
+            break
+        if depth(ln) == depth(lines[u]) + 3:
+            branches.append([])
+        branches[-1].append(ln)
+    return branches
+
+
+def test_places_combined_one_centroid_pass_over_cached_inputs(spark):
+    """places_combined runs the centroid UDF once and reads both union
+    inputs from the persisted layers, so writing all three layers runs
+    each input's scan, clip and clean once."""
+    import re
+
+    from tests.test_plan_lint import _strip_aqe_initial_sections
+
+    places = normalize_places(FX.fixture_df(spark, "places_place"))
+    buildings = normalize_buildings(FX.fixture_df(spark, "buildings_building"))
+    combined = add_sector_layers({"places": places, "buildings": buildings})[
+        "places_combined"
+    ]
+    combined.collect()  # materialize so AQE renders the final plan
+    plan = _strip_aqe_initial_sections(
+        combined._jdf.queryExecution().executedPlan().toString()
+    )
+    centroid_nodes = re.findall(r"ArrowEvalPython \[st_centroid_utm\(", plan)
+    assert len(centroid_nodes) == 1, plan
+    branches = _union_branches(plan)
+    assert len(branches) == 2, plan
+    for branch in branches:
+        first_scan = next(ln for ln in branch if "Scan" in ln)
+        assert "InMemoryTableScan" in first_scan, plan
